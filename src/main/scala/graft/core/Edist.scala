@@ -12,9 +12,12 @@ import scala.collection.mutable.ArrayBuffer
   * row/column 0 early drops leading characters from the aligned strings
   * (sources[0,:] stays None, edist.py:27-54).
   *
-  * These run row-local inside Dataset.map — O(n*m) per line, bounded by
-  * the caller's line-length cap (the analog of the reference's w>5000
-  * guard, div/eval.py:55-57).
+  * These run row-local inside Dataset.map, and no line-length cap bounds
+  * their input: a line is a whole DOM block. `levenshtein` and
+  * `Lev.bounded` run the exact band-doubling DP [[band]] in O((n+m)*d) time
+  * and O(min(n, m)) memory for distance d; MultiAlign's char alignment runs
+  * the same DP with an O(m*d) byte table of moves. `xlevenshtein` keeps
+  * the full O(n*m) table; it only runs on (short) training lines.
   */
 object Edist {
 
@@ -23,34 +26,126 @@ object Edist {
     */
   private val TildePattern = java.util.regex.Pattern.compile("~+")
 
-  /** Levenshtein distance (edist.py:6-19). Rolling single-array DP.
-    * Equal strings short-circuit to 0 (trivially exact) — the common case
-    * in the hot paths that compare support lines/tokens against a master
-    * that the extractor transform did not touch.
+  /** Levenshtein distance (edist.py:6-19). Equal strings short-circuit to
+    * 0 — the common case in the hot paths that compare support
+    * lines/tokens against a master that the extractor transform did not
+    * touch.
     */
-  def levenshtein(a0: String, b0: String): Int = {
+  def levenshtein(a: String, b: String): Int = atMost(a, b, Int.MaxValue)
+
+  /** min(levenshtein(a, b), bound + 1): the distance when it is at most
+    * `bound`, else bound + 1. A common prefix and suffix never change the
+    * distance, so they are trimmed; the rest runs [[band]] from the band
+    * [[startBand]] picks, doubling it until the distance fits (Ukkonen
+    * 1985), or the band reaches `bound` or covers the whole table.
+    */
+  def atMost(a0: String, b0: String, bound: Int): Int = {
+    if (bound < 0) return bound + 1
     if (a0 == b0) return 0
-    var a = a0; var b = b0
-    if (a.length > b.length) { val t = a; a = b; b = t }
-    val n = a.length; val m = b.length
-    var current = Array.tabulate(n + 1)(identity)
-    var previous = new Array[Int](n + 1)
+    // columns run over the shorter string: the two rows are O(min(n, m))
+    val (a, b) = if (a0.length <= b0.length) (a0, b0) else (b0, a0)
+    val la = a.length; val lb = b.length
+    var p = 0
+    while (p < la && a.charAt(p) == b.charAt(p)) p += 1
+    var s = 0
+    while (s < la - p && a.charAt(la - 1 - s) == b.charAt(lb - 1 - s)) s += 1
+    val n = la - p - s; val m = lb - p - s
+    if (m - n > bound) return bound + 1
+    val kMax = math.min(bound, m)
+    var k = math.min(kMax, startBand(a, p, n, b, p, m))
+    var d = band(a, p, n, b, p, m, k, null)
+    while (d > k && k < kMax) {
+      k = math.min(kMax, 2 * k)
+      d = band(a, p, n, b, p, m, k, null)
+    }
+    d
+  }
+
+  /** Band half-width to start the doubling from: a lower bound on the
+    * distance of a[aOff, aOff+n) and b[bOff, bOff+m), and at least 16. Each
+    * edit raises the count of at most one char (bucket) and lowers at most
+    * one, so the distance is at least the larger of the two strings' excess
+    * counts — exact for pure substitution and contraction rewrites such as
+    * the support extractor's c -> e and rn -> m, so one band pass usually
+    * suffices. Never below |m - n|.
+    */
+  private[graft] def startBand(a: String, aOff: Int, n: Int, b: String, bOff: Int, m: Int): Int = {
+    if (math.max(n, m) <= 16) return 16
+    val counts = new Array[Int](256)
+    for (j <- 0 until n) counts(a.charAt(aOff + j) & 255) += 1
+    for (j <- 0 until m) counts(b.charAt(bOff + j) & 255) -= 1
+    math.max(16, math.max(counts.filter(_ > 0).sum, -counts.filter(_ < 0).sum))
+  }
+
+  /** The traceback moves of the DP of a[0, n) (columns j) against b[0, m)
+    * (rows i), as [[band]] records them, for cells 1 <= i <= m, 1 <= j <= n
+    * on an optimal path. The band doubles from [[startBand]] until
+    * D(m, n) <= k: a traceback from (m, n) only visits cells with
+    * D <= D(m, n), which all lie in the band, so the O(m*k) byte table
+    * replaces the (m+1)*(n+1) one.
+    */
+  private[graft] def moves(a: String, n: Int, b: String, m: Int): (Int, Int) => Int = {
+    val kMax = math.max(m, n)
+    var k = math.min(kMax, startBand(a, 0, n, b, 0, m))
+    var dirs = new Array[Byte](m * (math.min(2 * k, n) + 1))
+    while (band(a, 0, n, b, 0, m, k, dirs) > k) {
+      k = math.min(kMax, 2 * k)
+      dirs = new Array[Byte](m * (math.min(2 * k, n) + 1))
+    }
+    val table = dirs; val kk = k; val w = math.min(2 * k, n) + 1
+    (i, j) => table((i - 1) * w + j - math.max(0, i - kk))
+  }
+
+  /** Banded Levenshtein DP of a[aOff, aOff+n) (columns j) against
+    * b[bOff, bOff+m) (rows i) over the cells |i - j| <= k; requires
+    * k >= |m - n|. Returns D(m, n) when it is at most k, else k + 1.
+    *
+    * Exact: every cell on an optimal path to (i, j) has D <= D(i, j) and
+    * |i - j| <= D, so a cell with D <= k gets its true value from in-band
+    * neighbours alone; a cell with D > k gets a value > k. Out-of-band
+    * cells read as +inf through one sentinel slot on each side of the row
+    * band, so no row reads slots another row left behind.
+    *
+    * With `dirs` non-null it also records, per in-band cell of rows 1..m,
+    * which move the traceback takes there: 0 = diagonal, 1 = up (gap in
+    * a), 2 = left (gap in b), preferring them in that order. Row i stores
+    * column j at (i-1)*w + j - max(0, i-k), with w = min(2k, n) + 1.
+    */
+  private[graft] def band(a: String, aOff: Int, n: Int, b: String, bOff: Int, m: Int,
+      k: Int, dirs: Array[Byte]): Int = {
+    val inf = Int.MaxValue / 2
+    val w = math.min(2 * k, n) + 1
+    var prev = new Array[Int](n + 2)
+    var cur = new Array[Int](n + 2)
+    var hi = math.min(n, k)
+    var j = 0
+    while (j <= hi) { prev(j) = j; j += 1 }
+    prev(hi + 1) = inf
     var i = 1
     while (i <= m) {
-      val t = previous; previous = current; current = t
-      current(0) = i
-      var j = 1
-      while (j <= n) {
-        val add = previous(j) + 1
-        val delete = current(j - 1) + 1
-        var change = previous(j - 1)
-        if (a.charAt(j - 1) != b.charAt(i - 1)) change += 1
-        current(j) = math.min(add, math.min(delete, change))
+      val lo = math.max(0, i - k)
+      hi = math.min(n, i + k)
+      var rowMin = inf
+      if (lo == 0) { cur(0) = i; rowMin = i; j = 1 }
+      else { cur(lo - 1) = inf; j = lo }
+      val bc = b.charAt(bOff + i - 1)
+      val base = (i - 1) * w - lo
+      while (j <= hi) {
+        val diag = prev(j - 1) + (if (a.charAt(aOff + j - 1) == bc) 0 else 1)
+        val up = prev(j) + 1
+        val left = cur(j - 1) + 1
+        val v = math.min(diag, math.min(up, left))
+        cur(j) = v
+        if (v < rowMin) rowMin = v
+        if (dirs != null) dirs(base + j) = if (v == diag) 0 else if (v == up) 1 else 2
         j += 1
       }
+      cur(hi + 1) = inf
+      if (rowMin > k) return k + 1 // every path to (m, n) crosses this row
+      val t = prev; prev = cur; cur = t
       i += 1
     }
-    current(n)
+    math.min(prev(n), k + 1)
   }
 
   /** Result of xlevenshtein: edit cost + confusion pairs (got, want). */

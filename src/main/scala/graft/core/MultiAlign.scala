@@ -39,59 +39,37 @@ object MultiAlign {
     * indices aligned to it plus insertions attached to the preceding master
     * position.
     */
-  private def charAlign(support: String, master: String): Array[StringBuilder] = {
-    val n = support.length; val m = master.length
-    // equal strings align on the all-match diagonal — the DP's traceback
-    // (diagonal-first) produces exactly one support char per master
-    // position and no insertions, so the identity buckets are the exact
-    // DP result without the O(n*m) table. A large share of support lines
-    // are byte-equal to the master (extractor transforms only rewrite
-    // lines containing their confusion patterns), making this the common
-    // case in the hot path.
-    if (support == master) {
-      val fast = new Array[StringBuilder](m + 1)
-      var k = 0
-      while (k < m) { fast(k) = new StringBuilder(1).append(master.charAt(k)); k += 1 }
-      fast(m) = new StringBuilder
-      return fast
-    }
-    // buckets(i) collects support chars aligned to master char i (0..m-1);
-    // buckets(m) holds leading insertions (attached to position 0 later).
-    // Flat row-major DP + lazily-created buckets: this runs once per
-    // (line, support extractor) in the hot path, so the (m+1)*(n+1)
-    // 2-D allocation and m+1 eager StringBuilders were measurable garbage.
-    val w = n + 1
-    val dp = new Array[Int]((m + 1) * w)
-    var j = 0
-    while (j <= n) { dp(j) = j; j += 1 }
-    var i = 1
-    while (i <= m) {
-      val row = i * w; val prev = row - w
-      dp(row) = i
-      val mc = master.charAt(i - 1)
-      var jj = 1
-      while (jj <= n) {
-        val delta = if (support.charAt(jj - 1) != mc) 1 else 0
-        dp(row + jj) = math.min(dp(prev + jj) + 1,
-          math.min(dp(row + jj - 1) + 1, dp(prev + jj - 1) + delta))
-        jj += 1
-      }
-      i += 1
-    }
-    val buckets = new Array[StringBuilder](m + 1)
+  private[graft] def charAlign(support: String, master: String): Array[StringBuilder] = {
+    // buckets(i) collects support chars aligned to master char i (0..m-1),
+    // insertions included (leading ones go to bucket 0); buckets(m) stays
+    // empty. Chars are appended in traceback order (reversed) into
+    // lazily-created buckets and flipped once per touched bucket at the end.
+    val buckets = new Array[StringBuilder](master.length + 1)
     def bucket(k: Int): StringBuilder = {
-      if (buckets(k) == null) buckets(k) = new StringBuilder
+      if (buckets(k) == null) buckets(k) = new StringBuilder(1)
       buckets(k)
     }
-    // traceback, preferring diagonal, then up (gap in support), then left;
-    // chars are appended in reverse and flipped once per touched bucket
+    // a common suffix is exact to trim: with equal last chars
+    // D(i, j) == D(i-1, j-1), so the traceback always takes the diagonal
+    // there. This also aligns a support line byte-equal to the master (the
+    // common case: extractor transforms only rewrite lines containing their
+    // confusion patterns) without a table. A common prefix is not exact to
+    // trim: for master "ab", support "abb" the full DP puts the second b in
+    // bucket 1, a trimmed one in bucket 0.
+    var m = master.length; var n = support.length
+    while (m > 0 && n > 0 && master.charAt(m - 1) == support.charAt(n - 1)) {
+      bucket(m - 1).append(support.charAt(n - 1))
+      m -= 1; n -= 1
+    }
+    val move = Edist.moves(support, n, master, m)
+    // traceback, preferring diagonal, then up (gap in support), then left
     var ii = m; var jj = n
     while (ii > 0 || jj > 0) {
-      val delta = if (ii > 0 && jj > 0 && support.charAt(jj - 1) != master.charAt(ii - 1)) 1 else 0
-      if (ii > 0 && jj > 0 && dp(ii * w + jj) == dp((ii - 1) * w + jj - 1) + delta) {
+      val mv = if (ii == 0) 2 else if (jj == 0) 1 else move(ii, jj)
+      if (mv == 0) {
         bucket(ii - 1).append(support.charAt(jj - 1))
         ii -= 1; jj -= 1
-      } else if (ii > 0 && dp(ii * w + jj) == dp((ii - 1) * w + jj) + 1) {
+      } else if (mv == 1) {
         ii -= 1 // deletion: master char with no support char
       } else {
         // insertion: support char attached to current master position
@@ -101,7 +79,7 @@ object MultiAlign {
       }
     }
     var k = 0
-    while (k <= m) {
+    while (k <= master.length) {
       if (buckets(k) == null) buckets(k) = new StringBuilder
       else if (buckets(k).length > 1) buckets(k) = buckets(k).reverseInPlace()
       k += 1

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.core.Edist
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -7,8 +8,10 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Banded (bounded) Levenshtein kernel: distance capped at `bound` with a
-  * diagonal band of width 2*bound+1 and early exit — O(bound * len) instead
-  * of O(len^2), returning min(levenshtein(a, b), bound + 1).
+  * diagonal band of half-width at most `bound` and early exit — O(bound *
+  * len) instead of O(len^2), returning min(levenshtein(a, b), bound + 1).
+  * It is [[Edist.atMost]], the band-doubling core `Edist.levenshtein` and
+  * the char alignment share.
   *
   * This is the scale path for edit-distance predicates (`lev(a,b) <= k` in
   * dedup and the reference's fuzzy word matcher, align/cli.py:211-217): at
@@ -19,42 +22,7 @@ object Lev {
   def bounded(a: UTF8String, b: UTF8String, bound: Int): Int =
     bounded(a.toString, b.toString, bound)
 
-  def bounded(a0: String, b0: String, bound: Int): Int = {
-    var a = a0; var b = b0
-    if (a.length > b.length) { val t = a; a = b; b = t }
-    val n = a.length; val m = b.length
-    val cap = bound + 1
-    if (m - n > bound) return cap
-    val inf = cap + 1
-    var prev = new Array[Int](n + 1)
-    var cur = new Array[Int](n + 1)
-    var j = 0
-    while (j <= n) { prev(j) = if (j <= cap) j else inf; j += 1 }
-    var i = 1
-    while (i <= m) {
-      java.util.Arrays.fill(cur, inf)
-      cur(0) = if (i <= cap) i else inf
-      // band: |i - j| <= bound
-      val jLo = math.max(1, i - bound)
-      val jHi = math.min(n, i + bound)
-      var rowMin = inf
-      j = jLo
-      while (j <= jHi) {
-        val add = if (prev(j) >= inf) inf else prev(j) + 1
-        val del = if (cur(j - 1) >= inf) inf else cur(j - 1) + 1
-        val chg = prev(j - 1) + (if (a.charAt(j - 1) != b.charAt(i - 1)) 1 else 0)
-        var v = math.min(add, math.min(del, chg))
-        if (v > cap) v = inf
-        cur(j) = v
-        if (v < rowMin) rowMin = v
-        j += 1
-      }
-      if (rowMin >= inf && cur(0) >= inf) return cap // early exit: whole band blown
-      val t = prev; prev = cur; cur = t
-      i += 1
-    }
-    math.min(prev(n), cap)
-  }
+  def bounded(a: String, b: String, bound: Int): Int = Edist.atMost(a, b, bound)
 }
 
 /** Catalyst expression `graft_lev_bounded(a, b, k)` — codegen-compatible

@@ -282,35 +282,3 @@ class EdgePageSpec extends AnyFunSuite {
     assert(blocks.nonEmpty) // no exception; Latin-1 decode path
   }
 }
-
-class AlignmentFuzzSpec extends AnyFunSuite {
-  test("alignLine + correctPage never throw on random line soup (seeded fuzz)") {
-    import graft.core.MultiAlign.LineVersion
-    import graft.fixtures.PagesGen
-    val rng = new java.util.Random(20260816L)
-    val alphabet = "abc defgh ij _~#\"ü ß…–ﬁ 0123!?.,;<>&"
-    def randLine(): String = {
-      val len = rng.nextInt(60)
-      (0 until len).map(_ => alphabet.charAt(rng.nextInt(alphabet.length))).mkString
-    }
-    val lexDe = PagesGen.lexiconFor("de"); val lexEn = PagesGen.lexiconFor("en")
-    (1 to 400).foreach { i =>
-      val master = TextNorm.normalize(randLine())
-      if (master.nonEmpty) {
-        val alt = TextNorm.normalize(randLine())
-        val versions = Seq(
-          LineVersion("x-master", f"b$i%04d", master, 0.9),
-          LineVersion("x-alt", f"b$i%04d", alt, 0.8))
-        val line = MultiAlign.alignLine(versions, Span(0, master.length.toLong))
-        // invariants: master line variant first, word variants index from 1
-        assert(line.variants.head.text == master)
-        line.words.foreach(w => assert(w.variants.head.index == 1))
-        // correction never throws and preserves token count
-        val ap = AlignedPage(s"https://fuzz.example/p$i", "en", Seq(line))
-        val cp = graft.pipeline.Pipeline.correctPage(ap, lexDe, lexEn)
-        assert(cp.lines.head.text.split(" ", -1).length ==
-          master.split(" ", -1).length)
-      }
-    }
-  }
-}

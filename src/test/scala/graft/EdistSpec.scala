@@ -101,6 +101,23 @@ class EdistSpec extends AnyFunSuite {
     }
   }
 
+  test("property: banded levenshtein == full rolling DP") {
+    val rng = new java.util.Random(14L)
+    def rs(alpha: String, len: Int): String =
+      (0 until len).map(_ => alpha.charAt(rng.nextInt(alpha.length))).mkString
+    (1 to 2000).foreach { x =>
+      // short words, then lines long enough for several band doublings
+      val len = if (x % 10 == 0) 100 + rng.nextInt(400) else rng.nextInt(20)
+      val a = rs("abcdet h", len)
+      val b = if (rng.nextBoolean()) rs("abcdet h", rng.nextInt(len + 1) + len / 2)
+        else a.map(c => if (rng.nextInt(12) == 0) 'e' else c)
+      assert(Edist.levenshtein(a, b) == FullDp.levenshtein(a, b), s"lev($a, $b)")
+      val k = rng.nextInt(40)
+      assert(Edist.atMost(a, b, k) == math.min(FullDp.levenshtein(a, b), k + 1),
+        s"atMost($a, $b, $k)")
+    }
+  }
+
   test("property: xlevenshtein cost equals levenshtein") {
     randWords(200, 12L).grouped(2).foreach {
       case Seq(a, b) if b.nonEmpty =>

@@ -14,11 +14,13 @@ class FunctionsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   test("Lev.bounded == min(levenshtein, bound+1) (1000 random cases)") {
+    // the oracle is the test-local full DP: Lev.bounded and
+    // Edist.levenshtein share one banded kernel
     val rng = new scala.util.Random(42)
     def rs(): String = Seq.fill(rng.nextInt(12))("abcd".charAt(rng.nextInt(4))).mkString
     (1 to 1000).foreach { _ =>
       val a = rs(); val b = rs(); val k = rng.nextInt(6)
-      assert(Lev.bounded(a, b, k) == math.min(Edist.levenshtein(a, b), k + 1),
+      assert(Lev.bounded(a, b, k) == math.min(FullDp.levenshtein(a, b), k + 1),
         s"a=$a b=$b k=$k")
     }
   }
